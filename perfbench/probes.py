@@ -8,6 +8,8 @@
   thread.
 * :func:`spark_counters` — jobs, tasks, shuffle-write and spill bytes per
   time window, read from Spark's own event log.
+* :func:`pin_tree` — CPU affinity of every thread of this process tree, for
+  the one-core scaling run.
 """
 
 from __future__ import annotations
@@ -108,14 +110,18 @@ def _hwm_and_comm(pid: int) -> tuple[int, str]:
 
 def tree_peaks(root: int) -> dict[int, tuple[int, bool, str]]:
     """``pid -> (peak RSS bytes, is a Python worker, name)`` for ``root`` and
-    its descendants; Python processes below the JVM are Spark's workers."""
+    its descendants; Python processes below the JVM are Spark's workers.
+    Other processes below the JVM are left out: they are short-lived forks
+    of it whose peak RSS is the JVM's own until they exec."""
     kids = _children()
     out = {}
     stack = [(root, False)]
     while stack:
         pid, under_jvm = stack.pop()
         hwm, comm = _hwm_and_comm(pid)
-        out[pid] = (hwm, under_jvm and comm.startswith("python"), comm)
+        worker = under_jvm and comm.startswith("python")
+        if worker or not under_jvm:
+            out[pid] = (hwm, worker, comm)
         stack.extend((c, under_jvm or comm == "java") for c in kids.get(pid, ()))
     return out
 
@@ -201,6 +207,26 @@ def spark_counters(event_log_dir: str, windows: dict[str, tuple[float, float]]) 
             "spill_bytes": sum(tasks[j][2] for j in jobs),
         }
     return out
+
+
+def pin_tree(root: int, cpus: set[int]) -> None:
+    """Set the CPU affinity of every thread of ``root`` and its descendants
+    (the JVM and Spark's Python daemon and workers). Processes forked later
+    inherit it from their parent."""
+    kids = _children()
+    stack = [root]
+    while stack:
+        pid = stack.pop()
+        try:
+            tids = os.listdir(f"/proc/{pid}/task")
+        except OSError:
+            continue
+        for tid in tids:
+            try:
+                os.sched_setaffinity(int(tid), cpus)
+            except OSError:  # the thread has exited
+                pass
+        stack.extend(kids.get(pid, ()))
 
 
 def stop_session(spark) -> None:

@@ -1,7 +1,7 @@
 """Time-to-result benchmark for the engine's graph kernels, driven only through
 the package's public functions.
 
-    python3 perfbench/run.py --workload graph_cold --seed 42 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload graph_cold --seed 42 --seconds 30 --trace 0
 
 Run from the repository root (or a checkout of it). One process, one closed
 loop: each call starts when the previous one has returned and its output has
@@ -12,14 +12,17 @@ end-to-end metrics (``--trace 0``) or the per-layer metrics (``--trace 1``).
 
 Workloads (see README.md for why each was chosen):
 
-* ``graph_cold`` — the first analysis of a new table in a fresh session:
-  every pass derives a fresh edge table, runs PageRank, CC and LPA against
-  empty checkpoint stores, then counts triangles and peels the 2-core;
+* ``graph_cold`` — the first analysis of a new table: set-up cross-checks
+  every kernel against ``oracle/graph_oracle.py`` on a small transcript
+  graph (being the process's first kernel calls, these also pay worker
+  start-up and code generation); every pass derives a fresh edge table,
+  runs PageRank, CC and LPA against empty checkpoint stores, then counts
+  triangles and peels the 2-core;
 * ``graph_warm`` — re-analysis: set-up derives the edges and builds one
-  store per kernel (checked against the oracles, which also warms the
-  session up); every pass re-derives the edges, re-runs the three kernels on
-  the prebuilt shards, resumes a 6-superstep PageRank to convergence and
-  runs a slice of the ``__spark_entry__`` query catalog.
+  store per kernel; every pass re-derives the edges, re-runs the three
+  kernels on the prebuilt shards, resumes a 6-superstep PageRank to
+  convergence and runs a slice of the ``__spark_entry__`` query catalog on
+  the sf0.001 tables in ``data/``.
 """
 
 from __future__ import annotations
@@ -30,7 +33,6 @@ import json
 import os
 import shutil
 import statistics
-import subprocess
 import sys
 import threading
 import time
@@ -38,26 +40,26 @@ import time
 T_START = time.monotonic()  # setup_s counts from process start, imports included
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
+SF_DIR = os.path.join(HERE, "data", "sf0.001")
 
 CORES = 4
 PARTITIONS = 2 * CORES
 DRIVER_MEM = "1g"
-GRAPH_CONVS = 500  # transcript graph; small enough for the Python oracles
-# The graph's shape comes from one datagen seed; --seed renames its
+GRAPH_CONVS = 500  # the timed transcript graph
+CHECK_CONVS = 50  # graph_cold's set-up cross-check graph, for the Python oracles
+# The graphs' shape comes from one datagen seed; --seed renames their
 # conversations, which changes every turn's vertex id and home partition but
-# not the work a kernel does. Across seeds, only CC's superstep count (the
-# eccentricity of the minimum-id vertex) still varies: 8 to 10 here.
+# not the work a kernel does.
 GRAPH_SEED = 42
-INPUT_REPEATS = 3  # input builds per set-up; setup_s counts their median once
-# calls per repeated operation; the median is reported
-DERIVE_REPEATS = 5
-KERNEL_REPEATS = 3  # graph_warm only
+DERIVE_REPEATS = 5  # derivations per pass; the median is reported
 LPA_ITERS = 5
 RESUME_AFTER = 6
 KCORE_K = 2
-# catalog slice (graph_warm): the MinHash LSH dedup scorer and one query on
-# the generic superstep loop (graph/runner.py)
-CATALOG = ["dedup_minhash_lsh", "graph_lpa_2iter"]
+# catalog slice (graph_warm): two relational queries, the MinHash LSH dedup
+# scorer, and a local-mode query on the generic superstep loop of
+# graph/runner.py
+CATALOG = ["agg_tpch_q1", "join_revenue_by_segment", "dedup_minhash_lsh",
+           "graph_cc_local_labels"]
 KERNELS = ("pagerank", "cc", "lpa")
 WORKLOADS = ("graph_cold", "graph_warm")
 WATCHDOG_S = 175
@@ -68,8 +70,7 @@ END_TO_END = {
     "edges_derive_s": "s",
     "pagerank_ttr_s": "s",
     "lpa_ttr_s": "s",
-    # PageRank + CC + LPA; CC alone is per-layer (cc.ttr_s): its superstep
-    # count varies with the seed
+    # PageRank + CC + LPA
     "kernels_ttr_s": "s",
     # graph_cold: triangles + k-core; graph_warm: partial + resumed
     # PageRank + catalog slice
@@ -83,6 +84,7 @@ PER_LAYER = {
     "session.first_call_s": "s",
     "cc.ttr_s": "s",
     "datagen.transcripts_s": "s",
+    "edges.derive_s": "s",
     "edges.rows": "count",
     **{f"{k}.{m}": u for k in KERNELS for m, u in (
         ("prep_s", "s"), ("s0_s", "s"), ("supersteps", "count"), ("read_s", "s"))},
@@ -95,10 +97,16 @@ PER_LAYER = {
     "lpa.superstep_late_s": "s",
     **{f"catalog.{k}.{m}": u for k in KERNELS for m, u in (
         ("bytes_written", "B"), ("manifests", "count"))},
-    # workload-specific outputs: 0 on the workload that does not run them
+    # resume wall time minus its resumed supersteps and read: the checkpoint
+    # read path
+    "catalog.resume_load_s": "s",
+    # workload-specific: 0 on the workload that does not run them
+    "triangles.total_s": "s",
     "triangles.count": "count",
+    "kcore.total_s": "s",
     "kcore.vertices": "count",
     "query.rows": "count",
+    **{f"query.{q}_s": "s" for q in CATALOG},
     **{f"spark.{w}.{c}": u for w in SPARK_WINDOWS for c, u in (
         ("jobs", "count"), ("tasks", "count"), ("shuffle_write_bytes", "B"),
         ("spill_bytes", "B"))},
@@ -112,6 +120,9 @@ PER_LAYER = {
     "trace.uncovered_s": "s",
     **{f"self.{layer}_s": "s" for layer in SPAN_LAYERS},
 }
+# per-layer times reported as the median over passes, like END_TO_END
+PER_PASS_LAYERS = ("edges.derive_s", "catalog.resume_load_s", "triangles.total_s",
+                   "kcore.total_s", *(f"query.{q}_s" for q in CATALOG))
 
 
 def java_tmp_opts(tmp: str) -> str:
@@ -173,6 +184,22 @@ def done_markers(store_root: str) -> dict[str, int]:
     }
 
 
+class Graph:
+    """A derived edge table and, for the output checks, its edges in NumPy."""
+
+    def __init__(self, edges, n_edges: int) -> None:
+        import numpy as np
+
+        self.edges, self.n_edges = edges, n_edges
+        e = edges.select("src", "dst", "weight").toPandas()
+        self.src, self.dst = e["src"].to_numpy(), e["dst"].to_numpy()
+        self.w = e["weight"].to_numpy()
+        self.vids = np.unique(np.concatenate([self.src, self.dst]))
+
+    def rows(self) -> list[tuple]:
+        return list(zip(self.src.tolist(), self.dst.tolist(), self.w.tolist()))
+
+
 class Bench:
     def __init__(self, workload: str, seed: int, seconds: float, trace: bool) -> None:
         from probes import RssSampler, Spans
@@ -185,14 +212,17 @@ class Bench:
         self.t_begin = time.time()
         self.spans = Spans(trace, f"{workload}-{seed}")
         self.rss = RssSampler(slots=CORES).start()
-        self.layer: dict[str, float] = {"triangles.count": 0, "kcore.vertices": 0, "query.rows": 0}
+        self.layer: dict[str, float] = {
+            "triangles.count": 0, "kcore.vertices": 0, "query.rows": 0,
+            **{k: 0.0 for k in PER_PASS_LAYERS},
+        }
         self.windows: dict[str, tuple[float, float]] = {}
         self.attempted = 0
         self.failed = 0
         self.errors: list[str] = []
         self.digests: dict[str, object] = {}
-        self.oracle: dict[str, object] = {}
         self.spark = None
+        self.graph: Graph | None = None
         self.pagerank_eps = None
 
     def path(self, *parts: str) -> str:
@@ -212,7 +242,7 @@ class Bench:
                 out = call()
                 dt = time.monotonic() - t0
             # Spark counters: the last call of a repeated operation, and all
-            # of the workload's other calls together
+            # of the pass's other calls together
             window = name.split(":")[0]
             start = self.windows.get(window, (t0w,))[0] if window == "other" else t0w
             self.windows[window] = (start, time.time())
@@ -233,7 +263,7 @@ class Bench:
 
     def compare_digests(self) -> None:
         # keyed by the settings too: another graph size gives other outputs
-        config = digest([GRAPH_CONVS, LPA_ITERS, RESUME_AFTER, KCORE_K, CATALOG])
+        config = digest([GRAPH_CONVS, CHECK_CONVS, LPA_ITERS, RESUME_AFTER, KCORE_K, CATALOG])
         path = os.path.join(self.state_dir, f"digest-seed{self.seed}-{config}.json")
         want = {}
         if os.path.exists(path):
@@ -247,46 +277,60 @@ class Bench:
             json.dump({**self.digests, **want}, f, sort_keys=True)
         os.replace(tmp, path)
 
-    def oracle_for(self, kernel: str):
-        """Result of ``oracle/graph_oracle.py`` on this run's graph (cached)."""
-        if kernel not in self.oracle:
-            from oracle import graph_oracle as o
-
-            rows = list(zip(self.edge_src.tolist(), self.edge_dst.tolist(), self.edge_w.tolist()))
-            with self.spans.span("oracle"):
-                self.oracle[kernel] = {
-                    "pagerank": lambda: o.pagerank_oracle(rows),
-                    "cc": lambda: o.cc_oracle(rows),
-                    "lpa": lambda: o.lpa_oracle(rows, max_iter=LPA_ITERS),
-                    "triangles": lambda: o.triangle_oracle(rows),
-                    "kcore": lambda: o.kcore_oracle(rows, KCORE_K),
-                }[kernel]()
-        return self.oracle[kernel]
-
-    def check_kernel(self, kernel: str, run, pdf) -> None:
-        """Seed-independent invariants, then equality with the oracle."""
+    def check_kernel(self, kernel: str, g: Graph, run, pdf, oracle=None) -> None:
+        """Seed-independent invariants; then equality with ``oracle`` (the
+        set-up cross-check) or the per-seed digest (the timed graph)."""
         import numpy as np
 
         col = "rank" if kernel == "pagerank" else "label"
         vids = pdf["vid"].to_numpy()
-        check(len(vids) == len(self.vids) and np.array_equal(np.sort(vids), self.vids),
+        check(len(vids) == len(g.vids) and np.array_equal(np.sort(vids), g.vids),
               f"{kernel} does not cover every vertex exactly once")
         got = dict(zip(vids.tolist(), pdf[col].tolist()))
-        want = self.oracle_for(kernel)
         if kernel == "pagerank":
             check(run.converged, "pagerank did not converge")
             check(abs(pdf["rank"].sum() - 1.0) < 1e-9, f"ranks sum to {pdf['rank'].sum()!r}")
-            check(max(abs(got[v] - want[v]) for v in want) < 1e-6, "ranks differ from the oracle")
+            if oracle is not None:
+                check(max(abs(got[v] - oracle[v]) for v in oracle) < 1e-6,
+                      "ranks differ from the oracle")
+                return
             top = pdf.sort_values(["rank", "vid"], ascending=[False, True])["vid"].head(10)
             self.remember("pagerank", {"top10": top.tolist(), "supersteps": run.supersteps})
-        else:
-            if kernel == "cc":
-                check(run.converged, "cc did not converge")
-                ls = [got[v] for v in self.edge_src.tolist()]
-                ld = [got[v] for v in self.edge_dst.tolist()]
-                check(ls == ld, "cc: an edge joins two different labels")
-            check(got == want, f"{kernel} labels differ from the oracle")
-            self.remember(kernel, {"labels": len(set(got.values())), "supersteps": run.supersteps})
+            return
+        if kernel == "cc":
+            check(run.converged, "cc did not converge")
+            ls = [got[v] for v in g.src.tolist()]
+            ld = [got[v] for v in g.dst.tolist()]
+            check(ls == ld, "cc: an edge joins two different labels")
+        if oracle is not None:
+            check(got == oracle, f"{kernel} labels differ from the oracle")
+            return
+        self.remember(kernel, {"labels": len(set(got.values())), "supersteps": run.supersteps})
+
+    def check_triangles(self, g: Graph, res, oracle=None) -> None:
+        total, pdf = res
+        check(int(pdf["triangles"].sum()) == 3 * total, "per-vertex triangles != 3x total")
+        if oracle is not None:
+            got = dict(zip(pdf["vid"].tolist(), pdf["triangles"].tolist()))
+            check(total == oracle[0] and got == oracle[1], "triangles differ from the oracle")
+            return
+        self.remember("triangles", int(total))
+        self.layer["triangles.count"] = int(total)
+
+    def check_kcore(self, g: Graph, pdf, oracle=None) -> None:
+        got = dict(zip(pdf["vid"].tolist(), pdf["degree"].tolist()))
+        # every survivor keeps >= k neighbours among the survivors
+        nbrs: dict[int, set] = {}
+        for s, d in zip(g.src.tolist(), g.dst.tolist()):
+            if s != d and s in got and d in got:
+                nbrs.setdefault(s, set()).add(d)
+                nbrs.setdefault(d, set()).add(s)
+        check(all(len(nbrs.get(v, ())) >= KCORE_K for v in got), "k-core degree < k")
+        if oracle is not None:
+            check(got == oracle, "k-core differs from the oracle")
+            return
+        self.remember("kcore", len(got))
+        self.layer["kcore.vertices"] = len(got)
 
     def kernel(self, name: str, edges, store_root: str, **kw):
         from tiktok_whisper_spark.graph import connected_components, label_propagation, pagerank
@@ -308,6 +352,19 @@ class Bench:
             t2 = time.monotonic()
             return run, pdf, t2 - t1, t2 - t0
         return call
+
+    def triangles_call(self, edges):
+        from tiktok_whisper_spark.graph import triangle_counts_local
+
+        def call():
+            res = triangle_counts_local(edges, num_partitions=PARTITIONS)
+            return res.total, res.per_vertex.toPandas()
+        return call
+
+    def kcore_call(self, edges):
+        from tiktok_whisper_spark.graph import kcore
+
+        return lambda: kcore(edges, KCORE_K).toPandas()
 
     def superstep_layers(self, name: str, run, wall: float, read_s: float) -> None:
         ms = {m["superstep"]: m["wall_ms"] / 1000.0 for m in run.metrics}
@@ -362,10 +419,21 @@ class Bench:
             self.spark.range(1000).selectExpr("sum(id)").collect()
             self.layer["session.first_call_s"] = time.monotonic() - t0
 
-    def derive(self, out: str):
+    def write_transcripts(self, n_convs: int, out: str) -> str:
+        """A datagen transcript table with every ``conv_id`` suffixed by the
+        seed, written once."""
+        from pyspark.sql import functions as F
+        from tiktok_whisper_spark import datagen
+
+        datagen.transcripts(self.spark, n_convs=n_convs, seed=GRAPH_SEED).withColumn(
+            "conv_id", F.concat("conv_id", F.lit(f"~{self.seed}"))
+        ).write.parquet(out)
+        return out
+
+    def derive(self, transcripts: str, out: str):
         from tiktok_whisper_spark.operators.edges import turn_adjacency_edges, turn_tool_edges
 
-        t = self.spark.read.parquet(self.transcripts)
+        t = self.spark.read.parquet(transcripts)
         e = turn_adjacency_edges(t, include_home=True).unionByName(
             turn_tool_edges(t, include_home=True)
         )
@@ -373,70 +441,87 @@ class Bench:
         edges = self.spark.read.parquet(out)
         return edges, edges.count()
 
-    def build_inputs(self) -> tuple[float, float]:
-        """Write the transcripts table (and, for the catalog, its sf tables)
-        INPUT_REPEATS times; returns the median and the total build time."""
-        import inputs
-        from pyspark.sql import functions as F
-        from tiktok_whisper_spark import datagen
-
-        builds, gens = [], []
-        for i in range(INPUT_REPEATS):
-            with self.spans.span("datagen:inputs"):
-                t0 = time.monotonic()
-                datagen.transcripts(self.spark, n_convs=GRAPH_CONVS, seed=GRAPH_SEED).withColumn(
-                    "conv_id", F.concat("conv_id", F.lit(f"~{self.seed}"))
-                ).write.parquet(self.path(f"input{i}", "transcripts"))
-                gens.append(time.monotonic() - t0)
-                if not self.cold:
-                    inputs.write_tables(self.seed, self.path(f"input{i}", "sf"))
-                builds.append(time.monotonic() - t0)
-        self.layer["datagen.transcripts_s"] = statistics.median(gens)
-        self.transcripts = self.path("input0", "transcripts")
-        self.sf_dir = self.path("input0", "sf")
-        return statistics.median(builds), sum(builds)
-
     def set_up(self) -> None:
-        import numpy as np
-
         self.start_session()
-        build_median, build_total = self.build_inputs()
-        with self.spans.span("setup:graph"):
-            self.edges, self.n_edges = self.derive(self.path("edges"))
-            e = self.edges.select("src", "dst", "weight").toPandas()
-            self.edge_src, self.edge_dst = e["src"].to_numpy(), e["dst"].to_numpy()
-            self.edge_w = e["weight"].to_numpy()
-            self.vids = np.unique(np.concatenate([self.edge_src, self.edge_dst]))
-            self.layer["edges.rows"] = self.n_edges
-        self.stores = {k: self.path(f"store_{k}") for k in KERNELS}
-        if not self.cold:
+        with self.spans.span("datagen:transcripts"):
+            t0 = time.monotonic()
+            self.transcripts = self.write_transcripts(GRAPH_CONVS, self.path("transcripts"))
+            self.layer["datagen.transcripts_s"] = time.monotonic() - t0
+        if self.cold:
+            self.cross_check()
+        else:
             self.warm_up()
-        # the inputs were built INPUT_REPEATS times: count their median once
-        self.setup_s = time.monotonic() - T_START - build_total + build_median
+        self.setup_s = time.monotonic() - T_START
+
+    def cross_check(self) -> None:
+        """graph_cold set-up: every kernel on a small graph against
+        ``oracle/graph_oracle.py``. These are the process's first kernel
+        calls, so they also pay worker start-up and code generation before
+        any timed call."""
+        from oracle import graph_oracle as o
+
+        with self.spans.span("setup:cross_check"):
+            small = self.write_transcripts(CHECK_CONVS, self.path("check", "transcripts"))
+            g = Graph(*self.derive(small, self.path("check", "edges")))
+            rows = g.rows()
+            with self.spans.span("oracle"):
+                want = {
+                    "pagerank": o.pagerank_oracle(rows),
+                    "cc": o.cc_oracle(rows),
+                    "lpa": o.lpa_oracle(rows, max_iter=LPA_ITERS),
+                    "triangles": o.triangle_oracle(rows),
+                    "kcore": o.kcore_oracle(rows, KCORE_K),
+                }
+            for k in KERNELS:
+                self.setup_op(f"cross_check:{k}", self.kernel_call(k, g.edges, self.path("check", k)),
+                              lambda r, k=k: self.check_kernel(k, g, r[0], r[1], want[k]))
+            self.setup_op("cross_check:triangles", self.triangles_call(g.edges),
+                          lambda r: self.check_triangles(g, r, want["triangles"]))
+            self.setup_op("cross_check:kcore", self.kcore_call(g.edges),
+                          lambda r: self.check_kcore(g, r, want["kcore"]))
+
+    def setup_op(self, name: str, call, verify):
+        """A checked operation during set-up (no timing, no Spark window)."""
+        self.attempted += 1
+        try:
+            with self.spans.span(f"setup:{name}"):
+                out = call()
+            with self.spans.span("check"):
+                verify(out)
+            return out
+        except Exception as e:
+            self.failed += 1
+            self.errors.append(f"{name}: {type(e).__name__}: {e}")
+            log(f"FAILED {name}: {type(e).__name__}: {e}")
+            return None
 
     def warm_up(self) -> None:
-        """graph_warm set-up: build the three stores, cross-checking each
-        kernel against its oracle (this also warms workers and codegen up),
-        and run the catalog slice's DuckDB oracle SQL."""
+        """graph_warm set-up: build the three stores (the process's first
+        kernel calls) and run the catalog slice's DuckDB oracle SQL."""
         import duckdb
 
         import __spark_entry__ as entry
 
+        with self.spans.span("setup:graph"):
+            self.graph = Graph(*self.derive(self.transcripts, self.path("edges")))
+            self.layer["edges.rows"] = self.graph.n_edges
+            self.remember("edges.rows", self.graph.n_edges)
+        self.stores = {k: self.path(f"store_{k}") for k in KERNELS}
         for k in KERNELS:
-            with self.spans.span(f"setup:{k}"):
-                run, pdf, _, _ = self.kernel_call(k, self.edges, self.stores[k])()
-            self.check_kernel(k, run, pdf)
+            self.setup_op(f"store:{k}", self.kernel_call(k, self.graph.edges, self.stores[k]),
+                          lambda r, k=k: self.check_kernel(k, self.graph, r[0], r[1]))
         self.markers = {k: done_markers(v) for k, v in self.stores.items()}
-        check(all(self.markers.values()), "warm stores hold no _DONE shard marker")
+        self.setup_op("store markers", lambda: self.markers,
+                      lambda m: check(all(m.values()), "a warm store holds no _DONE shard marker"))
         with self.spans.span("oracle"):
             # bounded: the oracle SQL runs in this process, beside the engine
             con = duckdb.connect(config={
                 "memory_limit": "1GB", "threads": 2, "temp_directory": self.path("tmp"),
             })
-            for t in os.listdir(self.sf_dir):
+            for t in os.listdir(SF_DIR):
                 con.execute(
                     f"CREATE VIEW {t.split('.')[0]} AS SELECT * FROM "
-                    f"'{os.path.join(self.sf_dir, t)}'"
+                    f"'{os.path.join(SF_DIR, t)}'"
                 )
             sqls = entry.oracle_sql()
             self.query_oracle = {q: con.execute(sqls[q]).fetchall() for q in CATALOG}
@@ -446,45 +531,40 @@ class Bench:
 
     def one_pass(self, i: int) -> dict[str, float]:
         out: dict[str, float] = {}
-        # short calls are repeated and their median reported: derivation on
-        # both workloads, the kernels on graph_warm (on graph_cold the first
-        # call in the process is a different, slower one, so it stays single)
+        self.windows.pop("other", None)  # the last pass's own calls only
+        # derivation is short, so it is repeated and the median reported
         derived = []
         for j in range(DERIVE_REPEATS):
             dt, res = self.timed_op(
                 "edges:derive",
-                lambda j=j: self.derive(self.path(f"pass{i}", f"edges{j}")),
-                lambda r: check(r[1] == self.n_edges, f"derived {r[1]} edges, not {self.n_edges}"),
+                lambda j=j: self.derive(self.transcripts, self.path(f"pass{i}", f"edges{j}")),
+                lambda r: self.remember("edges.rows", r[1]),
             )
-            derived.append((dt, res, self.path(f"pass{i}", f"edges{j}")))
-        if any(d[1] is None for d in derived):
+            derived.append((dt, res))
+        if any(res is None for _, res in derived):
             return out
-        out["edges_derive_s"] = statistics.median(d[0] for d in derived)
-        edges, self.edges_path = self.edges, self.path("edges")
-        if self.cold:
-            edges, self.edges_path = derived[-1][1][0], derived[-1][2]
+        if self.graph is None:  # graph_cold: checks use the first table derived
+            with self.spans.span("check"):
+                self.graph = Graph(*derived[0][1])
+                self.layer["edges.rows"] = self.graph.n_edges
+        out["edges_derive_s"] = out["edges.derive_s"] = statistics.median(dt for dt, _ in derived)
+        # graph_cold analyses the table it has just derived
+        edges = derived[-1][1][0] if self.cold else self.graph.edges
 
         for k in KERNELS:
             store = self.path(f"pass{i}", f"store_{k}") if self.cold else self.stores[k]
-            calls = []
-            for _ in range(1 if self.cold else KERNEL_REPEATS):
-                dt, r = self.timed_op(
-                    k, self.kernel_call(k, edges, store),
-                    lambda r, k=k: self.check_kernel(k, r[0], r[1]),
-                )
-                if r is None:
-                    break
-                calls.append((dt, r))
-            if len(calls) < (1 if self.cold else KERNEL_REPEATS):
-                out[f"{k}_ttr_s"] = None
-                continue
-            dt, r = sorted(calls, key=lambda c: c[0])[len(calls) // 2]
+            dt, r = self.timed_op(
+                k, self.kernel_call(k, edges, store),
+                lambda r, k=k: self.check_kernel(k, self.graph, r[0], r[1]),
+            )
             out[f"{k}_ttr_s"] = dt
+            if r is None:
+                continue
             self.superstep_layers(k, r[0], r[3], r[2])
             self.layer[f"catalog.{k}.bytes_written"] = du_bytes(store)
             self.layer[f"catalog.{k}.manifests"] = count_manifests(store)
             if k == "pagerank":
-                self.full_ranks, self.pagerank_store = r[1], store
+                self.full_ranks, self.pagerank_run = r[1], (edges, store)
                 walls = [m["wall_ms"] for m in r[0].metrics if m["superstep"] >= 2]
                 self.layer["pagerank.superstep_eps"] = self.pagerank_eps = (
                     r[0].metrics[-1]["edges_processed"] / (statistics.median(walls) / 1000.0)
@@ -495,9 +575,9 @@ class Bench:
         if all(f"catalog.{k}.bytes_written" in self.layer for k in KERNELS):
             out["store_bytes_per_edge"] = sum(
                 self.layer[f"catalog.{k}.bytes_written"] for k in KERNELS
-            ) / self.n_edges
+            ) / self.graph.n_edges
 
-        other = self.cold_other(edges) if self.cold else self.warm_other()
+        other = self.cold_other(edges, out) if self.cold else self.warm_other(out)
         out["other_ttr_s"] = None if None in other else sum(other)
         if not self.cold:
             for k, before in self.markers.items():
@@ -505,80 +585,67 @@ class Bench:
                 if done_markers(self.stores[k]) != before:
                     self.failed += 1
                     self.errors.append(f"{k}: warm shards were rebuilt")
+        else:
+            shutil.rmtree(self.path(f"pass{i - 1}"), ignore_errors=True)
         return out
 
-    def cold_other(self, edges) -> list:
-        from tiktok_whisper_spark.graph import kcore, triangle_counts_local
-
-        def tri_call():
-            res = triangle_counts_local(edges, num_partitions=PARTITIONS)
-            return res.total, res.per_vertex.toPandas()
-
-        def tri_ok(r):
-            total, pdf = r
-            check(int(pdf["triangles"].sum()) == 3 * total, "per-vertex triangles != 3x total")
-            want_total, want_pv = self.oracle_for("triangles")
-            got = dict(zip(pdf["vid"].tolist(), pdf["triangles"].tolist()))
-            check(total == want_total and got == want_pv, "triangles differ from the oracle")
-            self.remember("triangles", int(total))
-            self.layer["triangles.count"] = int(total)
-
-        def kcore_ok(pdf):
-            got = dict(zip(pdf["vid"].tolist(), pdf["degree"].tolist()))
-            # every survivor keeps >= k neighbours among the survivors
-            nbrs: dict[int, set] = {}
-            for s, d in zip(self.edge_src.tolist(), self.edge_dst.tolist()):
-                if s != d and s in got and d in got:
-                    nbrs.setdefault(s, set()).add(d)
-                    nbrs.setdefault(d, set()).add(s)
-            check(all(len(nbrs.get(v, ())) >= KCORE_K for v in got), "k-core degree < k")
-            check(got == self.oracle_for("kcore"), "k-core differs from the oracle")
-            self.remember("kcore", len(got))
-            self.layer["kcore.vertices"] = len(got)
-
-        t_tri, _ = self.timed_op("other:triangles", tri_call, tri_ok)
-        t_kc, _ = self.timed_op("other:kcore", lambda: kcore(edges, KCORE_K).toPandas(), kcore_ok)
+    def cold_other(self, edges, out: dict) -> list:
+        g = self.graph
+        t_tri, _ = self.timed_op("other:triangles", self.triangles_call(edges),
+                                 lambda r: self.check_triangles(g, r))
+        t_kc, _ = self.timed_op("other:kcore", self.kcore_call(edges),
+                                lambda r: self.check_kcore(g, r))
+        out["triangles.total_s"], out["kcore.total_s"] = t_tri, t_kc
         return [t_tri, t_kc]
 
-    def warm_other(self) -> list:
+    def warm_other(self, out: dict) -> list:
         import __spark_entry__ as entry
 
         times = []
+        edges, store = self.graph.edges, self.stores["pagerank"]
         dt, _ = self.timed_op(
             "other:resume_partial",
-            self.kernel_call("pagerank", self.edges, self.stores["pagerank"], max_iter=RESUME_AFTER),
+            self.kernel_call("pagerank", edges, store, max_iter=RESUME_AFTER),
             lambda r: check(r[0].supersteps == RESUME_AFTER and not r[0].converged,
                             "partial pagerank did not stop at its cap"),
         )
         times.append(dt)
 
         def resume_ok(r):
-            run, pdf = r[0], r[1]
+            run, pdf, read_s, wall = r
             check(run.resumed_from == RESUME_AFTER, f"resumed from {run.resumed_from}")
-            self.check_kernel("pagerank", run, pdf)
+            self.check_kernel("pagerank", self.graph, run, pdf)
             a = self.full_ranks.sort_values("vid")["rank"].to_numpy()
             b = pdf.sort_values("vid")["rank"].to_numpy()
             check(float(abs(a - b).max()) < 1e-12, "resumed ranks differ from a full run")
+            steps = sum(m["wall_ms"] for m in run.metrics if m["superstep"] > RESUME_AFTER)
+            out["catalog.resume_load_s"] = wall - read_s - steps / 1000.0
 
         dt, _ = self.timed_op(
             "other:resume",
-            self.kernel_call("pagerank", self.edges, self.stores["pagerank"], resume=True),
+            self.kernel_call("pagerank", edges, store, resume=True),
             resume_ok,
         )
         times.append(dt)
         fns = entry.queries()
+        rows = 0
         for q in CATALOG:
-            def q_ok(rows, q=q):
-                check(same_rows(rows, self.query_oracle[q]), f"{q} differs from its oracle SQL")
-                self.remember(f"query.{q}", len(rows))
-                self.layer["query.rows"] += len(rows)
+            def q_ok(res, q=q):
+                nonlocal rows
+                check(same_rows(res, self.query_oracle[q]), f"{q} differs from its oracle SQL")
+                values = sorted(repr([f"{v:.6g}" if isinstance(v, float) else v for v in r])
+                                for r in res)
+                self.remember(f"query.{q}", [len(res), digest(values)])
+                rows += len(res)
 
             dt, _ = self.timed_op(
                 f"other:query:{q}",
-                lambda q=q: [tuple(r) for r in fns[q](self.spark, self.sf_dir).collect()],
+                lambda q=q: [tuple(r) for r in fns[q](self.spark, SF_DIR).collect()],
                 q_ok,
             )
+            out[f"query.{q}_s"] = dt
             times.append(dt)
+        self.layer["query.rows"] = rows
         return times
 
     # -- the run --------------------------------------------------------------------
@@ -586,9 +653,10 @@ class Bench:
     def run(self) -> dict:
         self.set_up()
         passes: list[dict[str, float]] = []
-        t0 = time.monotonic()
-        while not passes or time.monotonic() - t0 < self.seconds:
-            self.layer["query.rows"] = 0
+        t0 = last = time.monotonic()
+        # whole passes only: another pass starts if it should end in time
+        while not passes or 2 * time.monotonic() - last - t0 <= self.seconds:
+            last = time.monotonic()
             passes.append(self.one_pass(len(passes)))
         t_end = time.time()
         self.rss.stop()
@@ -599,18 +667,18 @@ class Bench:
             self.failed += 1
             self.errors.append(str(e))
         metrics = {}
-        for key in END_TO_END:
+        for key in (*END_TO_END, *PER_PASS_LAYERS):
             vals = [p.get(key) for p in passes]
             if vals and None not in vals:
-                metrics[key] = statistics.median(vals)
+                (metrics if key in END_TO_END else self.layer)[key] = statistics.median(vals)
         metrics["setup_s"] = self.setup_s
         self.layer["peak_rss_mb"] = self.rss.peak_total / 2**20
         self.layer["pyworker.peak_rss_mb"] = self.rss.peak_workers / 2**20
-        log("peak RSS by process (MB): " + ", ".join(
-            f"{comm}:{pid}={h >> 20}" for pid, (h, _, comm) in self.rss.at_peak.items()
-        ))
+        log(f"{len(passes)} pass(es); setup {self.setup_s:.2f}s; peak RSS by process (MB): "
+            + ", ".join(f"{comm}:{pid}={h >> 20}"
+                        for pid, (h, _, comm) in self.rss.at_peak.items()))
         if self.trace:
-            log(f"{len(passes)} pass(es); end-to-end while traced: {json.dumps(metrics)}")
+            log(f"end-to-end while traced: {json.dumps(metrics)}")
             log(f"spans: {self.spans_summary()}")
             self.trace_layers(t_end)
         return self.report(metrics)
@@ -640,21 +708,22 @@ class Bench:
         self.spans.write(os.path.join(self.state_dir, "spans", f"{self.spans.run_id}.json"))
 
     def scaling(self) -> None:
-        """``scaling.eff_1_to_4``: this process's steady PageRank edges/s
-        against the same run in a child pinned to one core."""
+        """``scaling.eff_1_to_4``: the last pass's steady PageRank edges/s
+        against a re-run on its store (``max_iter=6``: supersteps 2 to 6)
+        with the whole process tree pinned to one core."""
+        from probes import pin_tree
+
         if self.pagerank_eps is None:
             return
+        cpus = os.sched_getaffinity(0)
         with self.spans.span("scaling"):
-            out = subprocess.run(
-                ["taskset", "-c", "0", sys.executable, os.path.join(HERE, "scaling.py"),
-                 self.pagerank_store, self.edges_path, self.path("scaling")],
-                capture_output=True, text=True, timeout=120,
-                env={**os.environ, "SPARK_GRAFT_LOCAL_DIR": self.path("scaling", "spark-local")},
-            )
-        if out.returncode != 0:
-            self.errors.append(f"scaling child failed: {out.stderr[-2000:]}")
-            return
-        eps1 = json.loads(out.stdout.strip().splitlines()[-1])["eps"]
+            pin_tree(os.getpid(), {min(cpus)})
+            try:
+                run = self.kernel("pagerank", *self.pagerank_run, max_iter=6)
+            finally:
+                pin_tree(os.getpid(), cpus)
+        walls = [m["wall_ms"] / 1000.0 for m in run.metrics if m["superstep"] >= 2]
+        eps1 = run.metrics[-1]["edges_processed"] / statistics.median(walls)
         self.layer["scaling.eff_1_to_4"] = self.pagerank_eps / eps1 / CORES
 
     def report(self, metrics: dict) -> dict:
