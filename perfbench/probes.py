@@ -161,7 +161,8 @@ class RssSampler:
 
     def stop(self) -> None:
         self._halt.set()
-        self._thread.join(timeout=5)
+        if self._thread.ident is not None:  # started
+            self._thread.join(timeout=5)
 
 
 def spark_counters(event_log_dir: str, windows: dict[str, tuple[float, float]]) -> dict[str, dict]:

@@ -1,7 +1,7 @@
 """Time-to-result benchmark for the engine's graph kernels, driven only through
 the package's public functions.
 
-    python3 perfbench/run.py --workload graph_cold --seed 42 --seconds 30 --trace 0
+    python3 perfbench/run.py --workload graph_cold --seed 42 --seconds 20 --trace 0
 
 Run from the repository root (or a checkout of it). One process, one closed
 loop: each call starts when the previous one has returned and its output has
@@ -15,14 +15,14 @@ Workloads (see README.md for why each was chosen):
 * ``graph_cold`` — the first analysis of a new table: set-up cross-checks
   every kernel against ``oracle/graph_oracle.py`` on a small transcript
   graph (being the process's first kernel calls, these also pay worker
-  start-up and code generation); every pass derives a fresh edge table,
-  runs PageRank, CC and LPA against empty checkpoint stores, then counts
-  triangles and peels the 2-core;
+  start-up and code generation); every pass runs PageRank, CC and LPA
+  against empty checkpoint stores, then counts triangles and peels the
+  2-core, each call on an edge table derived just before it;
 * ``graph_warm`` — re-analysis: set-up derives the edges and builds one
-  store per kernel; every pass re-derives the edges, re-runs the three
-  kernels on the prebuilt shards, resumes a 6-superstep PageRank to
-  convergence and runs a slice of the ``__spark_entry__`` query catalog on
-  the sf0.001 tables in ``data/``.
+  store per kernel; every pass re-runs the three kernels twice on the
+  prebuilt shards, resumes a 6-superstep PageRank to convergence and runs a
+  slice of the ``__spark_entry__`` query catalog on the sf0.001 tables in
+  ``data/``.
 """
 
 from __future__ import annotations
@@ -51,7 +51,6 @@ CHECK_CONVS = 50  # graph_cold's set-up cross-check graph, for the Python oracle
 # conversations, which changes every turn's vertex id and home partition but
 # not the work a kernel does.
 GRAPH_SEED = 42
-DERIVE_REPEATS = 5  # derivations per pass; the median is reported
 LPA_ITERS = 5
 RESUME_AFTER = 6
 KCORE_K = 2
@@ -61,20 +60,22 @@ KCORE_K = 2
 CATALOG = ["agg_tpch_q1", "join_revenue_by_segment", "dedup_minhash_lsh",
            "graph_cc_local_labels"]
 KERNELS = ("pagerank", "cc", "lpa")
+# graph_warm re-runs the three kernels this many times a pass; each kernel's
+# time is the median over them
+WARM_ROUNDS = 2
 WORKLOADS = ("graph_cold", "graph_warm")
 WATCHDOG_S = 175
 
 # the same names in both workloads; medians over the passes of a run
+# Each one sums seconds of work: on a shared 4-core host a single call of
+# 1-4 s spreads by 10-35% from run to run, too much for a 25% bound.
 END_TO_END = {
     "setup_s": "s",
-    "edges_derive_s": "s",
-    "pagerank_ttr_s": "s",
-    "lpa_ttr_s": "s",
+    # every timed call of a pass: derivations, kernels and the workload's
+    # other calls
+    "analysis_ttr_s": "s",
     # PageRank + CC + LPA
     "kernels_ttr_s": "s",
-    # graph_cold: triangles + k-core; graph_warm: partial + resumed
-    # PageRank + catalog slice
-    "other_ttr_s": "s",
     "store_bytes_per_edge": "B/edge",
 }
 SPARK_WINDOWS = ("edges", *KERNELS, "other")
@@ -82,7 +83,12 @@ SPAN_LAYERS = ("session", "datagen", "setup", "edges", *KERNELS, "other", "check
 PER_LAYER = {
     "session.get_spark_s": "s",
     "session.first_call_s": "s",
+    "pagerank.ttr_s": "s",
     "cc.ttr_s": "s",
+    "lpa.ttr_s": "s",
+    # graph_cold: triangles + k-core; graph_warm: partial + resumed
+    # PageRank + catalog slice
+    "other.ttr_s": "s",
     "datagen.transcripts_s": "s",
     "edges.derive_s": "s",
     "edges.rows": "count",
@@ -121,8 +127,9 @@ PER_LAYER = {
     **{f"self.{layer}_s": "s" for layer in SPAN_LAYERS},
 }
 # per-layer times reported as the median over passes, like END_TO_END
-PER_PASS_LAYERS = ("edges.derive_s", "catalog.resume_load_s", "triangles.total_s",
-                   "kcore.total_s", *(f"query.{q}_s" for q in CATALOG))
+PER_PASS_LAYERS = ("pagerank.ttr_s", "cc.ttr_s", "lpa.ttr_s", "other.ttr_s", "edges.derive_s",
+                   "catalog.resume_load_s", "triangles.total_s", "kcore.total_s",
+                   *(f"query.{q}_s" for q in CATALOG))
 
 
 def java_tmp_opts(tmp: str) -> str:
@@ -211,7 +218,10 @@ class Bench:
         os.makedirs(os.path.join(self.work, "tmp"), exist_ok=True)
         self.t_begin = time.time()
         self.spans = Spans(trace, f"{workload}-{seed}")
-        self.rss = RssSampler(slots=CORES).start()
+        # peak RSS is a per-layer metric: polled only in the traced run
+        self.rss = RssSampler(slots=CORES)
+        if trace:
+            self.rss.start()
         self.layer: dict[str, float] = {
             "triangles.count": 0, "kcore.vertices": 0, "query.rows": 0,
             **{k: 0.0 for k in PER_PASS_LAYERS},
@@ -219,6 +229,7 @@ class Bench:
         self.windows: dict[str, tuple[float, float]] = {}
         self.attempted = 0
         self.failed = 0
+        self.pass_times: list = []  # every timed call of the current pass
         self.errors: list[str] = []
         self.digests: dict[str, object] = {}
         self.spark = None
@@ -241,6 +252,8 @@ class Bench:
                 t0w, t0 = time.time(), time.monotonic()
                 out = call()
                 dt = time.monotonic() - t0
+            log(f"{name} {dt:.3f}s")
+            self.pass_times.append(dt)
             # Spark counters: the last call of a repeated operation, and all
             # of the pass's other calls together
             window = name.split(":")[0]
@@ -250,6 +263,7 @@ class Bench:
                 verify(out)
             return dt, out
         except Exception as e:  # the run must finish and report the failure
+            self.pass_times.append(None)
             self.failed += 1
             self.errors.append(f"{name}: {type(e).__name__}: {e}")
             log(f"FAILED {name}: {type(e).__name__}: {e}")
@@ -449,7 +463,12 @@ class Bench:
             self.layer["datagen.transcripts_s"] = time.monotonic() - t0
         if self.cold:
             self.cross_check()
-        else:
+        # the timed graph, derived once: the reference the output checks use
+        with self.spans.span("setup:graph"):
+            self.graph = Graph(*self.derive(self.transcripts, self.path("edges")))
+            self.layer["edges.rows"] = self.graph.n_edges
+            self.remember("edges.rows", self.graph.n_edges)
+        if not self.cold:
             self.warm_up()
         self.setup_s = time.monotonic() - T_START
 
@@ -502,10 +521,6 @@ class Bench:
 
         import __spark_entry__ as entry
 
-        with self.spans.span("setup:graph"):
-            self.graph = Graph(*self.derive(self.transcripts, self.path("edges")))
-            self.layer["edges.rows"] = self.graph.n_edges
-            self.remember("edges.rows", self.graph.n_edges)
         self.stores = {k: self.path(f"store_{k}") for k in KERNELS}
         for k in KERNELS:
             self.setup_op(f"store:{k}", self.kernel_call(k, self.graph.edges, self.stores[k]),
@@ -529,35 +544,40 @@ class Bench:
 
     # -- one pass -----------------------------------------------------------------
 
+    def fresh_edges(self, i: int, j: int, times: list):
+        """Derive a fresh edge table (timed; its time is appended to
+        ``times``). graph_cold derives one before each of its operations,
+        so the derivation samples are spread over the whole pass."""
+        dt, res = self.timed_op(
+            "edges:derive",
+            lambda: self.derive(self.transcripts, self.path(f"pass{i}", f"edges{j}")),
+            lambda r: self.remember("edges.rows", r[1]),
+        )
+        times.append(dt)
+        return None if res is None else res[0]
+
     def one_pass(self, i: int) -> dict[str, float]:
         out: dict[str, float] = {}
         self.windows.pop("other", None)  # the last pass's own calls only
-        # derivation is short, so it is repeated and the median reported
-        derived = []
-        for j in range(DERIVE_REPEATS):
-            dt, res = self.timed_op(
-                "edges:derive",
-                lambda j=j: self.derive(self.transcripts, self.path(f"pass{i}", f"edges{j}")),
-                lambda r: self.remember("edges.rows", r[1]),
-            )
-            derived.append((dt, res))
-        if any(res is None for _, res in derived):
-            return out
-        if self.graph is None:  # graph_cold: checks use the first table derived
-            with self.spans.span("check"):
-                self.graph = Graph(*derived[0][1])
-                self.layer["edges.rows"] = self.graph.n_edges
-        out["edges_derive_s"] = out["edges.derive_s"] = statistics.median(dt for dt, _ in derived)
-        # graph_cold analyses the table it has just derived
-        edges = derived[-1][1][0] if self.cold else self.graph.edges
-
-        for k in KERNELS:
-            store = self.path(f"pass{i}", f"store_{k}") if self.cold else self.stores[k]
+        self.pass_times = []
+        derive_s: list = []
+        ttr: dict[str, list] = {k: [] for k in KERNELS}
+        for k in (KERNELS if self.cold else KERNELS * WARM_ROUNDS):
+            # graph_cold analyses a table it has just derived, with an empty
+            # store; graph_warm the set-up table with its prebuilt store
+            if self.cold:
+                edges = self.fresh_edges(i, len(derive_s), derive_s)
+                store = self.path(f"pass{i}", f"store_{k}")
+            else:
+                edges, store = self.graph.edges, self.stores[k]
+            if edges is None:
+                ttr[k].append(None)
+                continue
             dt, r = self.timed_op(
                 k, self.kernel_call(k, edges, store),
                 lambda r, k=k: self.check_kernel(k, self.graph, r[0], r[1]),
             )
-            out[f"{k}_ttr_s"] = dt
+            ttr[k].append(dt)
             if r is None:
                 continue
             self.superstep_layers(k, r[0], r[3], r[2])
@@ -569,34 +589,42 @@ class Bench:
                 self.layer["pagerank.superstep_eps"] = self.pagerank_eps = (
                     r[0].metrics[-1]["edges_processed"] / (statistics.median(walls) / 1000.0)
                 )
-        if all(out.get(f"{k}_ttr_s") is not None for k in KERNELS):
-            out["kernels_ttr_s"] = sum(out[f"{k}_ttr_s"] for k in KERNELS)
-            self.layer["cc.ttr_s"] = out["cc_ttr_s"]
+        if all(None not in ts for ts in ttr.values()):
+            med = {k: statistics.median(ts) for k, ts in ttr.items()}
+            out.update({f"{k}.ttr_s": t for k, t in med.items()})
+            out["kernels_ttr_s"] = sum(med.values())
         if all(f"catalog.{k}.bytes_written" in self.layer for k in KERNELS):
             out["store_bytes_per_edge"] = sum(
                 self.layer[f"catalog.{k}.bytes_written"] for k in KERNELS
             ) / self.graph.n_edges
 
-        other = self.cold_other(edges, out) if self.cold else self.warm_other(out)
-        out["other_ttr_s"] = None if None in other else sum(other)
+        other = self.cold_other(i, derive_s, out) if self.cold else self.warm_other(out)
+        out["other.ttr_s"] = None if None in other else sum(other)
+        if derive_s and None not in derive_s:
+            out["edges.derive_s"] = statistics.median(derive_s)
+        if None not in self.pass_times:
+            out["analysis_ttr_s"] = sum(self.pass_times)
         if not self.cold:
             for k, before in self.markers.items():
                 self.attempted += 1
                 if done_markers(self.stores[k]) != before:
                     self.failed += 1
                     self.errors.append(f"{k}: warm shards were rebuilt")
-        else:
-            shutil.rmtree(self.path(f"pass{i - 1}"), ignore_errors=True)
+        shutil.rmtree(self.path(f"pass{i - 1}"), ignore_errors=True)
         return out
 
-    def cold_other(self, edges, out: dict) -> list:
+    def cold_other(self, i: int, derive_s: list, out: dict) -> list:
         g = self.graph
-        t_tri, _ = self.timed_op("other:triangles", self.triangles_call(edges),
-                                 lambda r: self.check_triangles(g, r))
-        t_kc, _ = self.timed_op("other:kcore", self.kcore_call(edges),
-                                lambda r: self.check_kcore(g, r))
-        out["triangles.total_s"], out["kcore.total_s"] = t_tri, t_kc
-        return [t_tri, t_kc]
+        times = []
+        for j, (name, call, verify) in enumerate((
+            ("triangles", self.triangles_call, lambda r: self.check_triangles(g, r)),
+            ("kcore", self.kcore_call, lambda r: self.check_kcore(g, r)),
+        ), start=len(KERNELS)):
+            edges = self.fresh_edges(i, j, derive_s)
+            dt = None if edges is None else self.timed_op(f"other:{name}", call(edges), verify)[0]
+            out[f"{name}.total_s"] = dt
+            times.append(dt)
+        return times
 
     def warm_other(self, out: dict) -> list:
         import __spark_entry__ as entry
@@ -674,10 +702,10 @@ class Bench:
         metrics["setup_s"] = self.setup_s
         self.layer["peak_rss_mb"] = self.rss.peak_total / 2**20
         self.layer["pyworker.peak_rss_mb"] = self.rss.peak_workers / 2**20
-        log(f"{len(passes)} pass(es); setup {self.setup_s:.2f}s; peak RSS by process (MB): "
-            + ", ".join(f"{comm}:{pid}={h >> 20}"
-                        for pid, (h, _, comm) in self.rss.at_peak.items()))
+        log(f"{len(passes)} pass(es); setup {self.setup_s:.2f}s")
         if self.trace:
+            log("peak RSS by process (MB): " + ", ".join(
+                f"{comm}:{pid}={h >> 20}" for pid, (h, _, comm) in self.rss.at_peak.items()))
             log(f"end-to-end while traced: {json.dumps(metrics)}")
             log(f"spans: {self.spans_summary()}")
             self.trace_layers(t_end)
@@ -694,6 +722,9 @@ class Bench:
 
         self.scaling()
         self.stop_spark()
+        for w in SPARK_WINDOWS:  # 0 for a window the workload does not open
+            for c in ("jobs", "tasks", "shuffle_write_bytes", "spill_bytes"):
+                self.layer[f"spark.{w}.{c}"] = 0
         for w, c in spark_counters(self.path("eventlog"), self.windows).items():
             for k, v in c.items():
                 self.layer[f"spark.{w}.{k}"] = v
@@ -703,6 +734,7 @@ class Bench:
         cov = self.spans.coverage(self.t_begin, t_end)
         self.layer["trace.coverage_pct"] = 100.0 * cov
         self.layer["trace.uncovered_s"] = (1.0 - cov) * (t_end - self.t_begin)
+        self.layer.update({f"self.{layer}_s": 0.0 for layer in SPAN_LAYERS})
         for layer, sec in self.spans.layer_self_s().items():
             self.layer[f"self.{layer}_s"] = sec
         self.spans.write(os.path.join(self.state_dir, "spans", f"{self.spans.run_id}.json"))
